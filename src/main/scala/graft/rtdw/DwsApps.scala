@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.streaming.WindowedAggs
+import graft.streaming.{StateLogic, Stateful, WindowedAggs}
 
 /** Order-detail version carrying its dimension key (A7 state bean). */
 case class SkuAmount(id: String, skuId: String, ts: Long, amountCents: Long)
@@ -44,26 +44,18 @@ object DwsApps {
   /** DwsTradeSkuOrderWindow (SURVEY §2.5 A4+A7, §2.4 J5): upsert-aware
     * per-sku amount windows. State keyed by order-detail id emits
     * (new − last) deltas so window sums stay correct under re-emitted
-    * upserts (reference :158-201); downstream: tumbling window × sku →
-    * Σdelta, then broadcast dim enrichment (J5) by the caller.
+    * upserts (reference :158-201; [[StateLogic.upsertFold]] — a tie on
+    * ts is broken by amount, so a replay in any order sums the same);
+    * downstream: tumbling window × sku → Σdelta, then broadcast dim
+    * enrichment (J5) by the caller.
     */
   def skuAmountDeltas(ds: Dataset[SkuAmount]): Dataset[SkuAmountDelta] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.id)
-      .flatMapGroupsWithState[(Long, Long), SkuAmountDelta](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, rows: Iterator[SkuAmount], state: GroupState[(Long, Long)]) =>
-          var (lastTs, lastAmt) = state.getOption.getOrElse((Long.MinValue, 0L))
-          val out = rows.toSeq.sortBy(_.ts).flatMap { v =>
-            if (v.ts >= lastTs) {
-              val d = SkuAmountDelta(v.skuId, v.ts, v.amountCents - lastAmt)
-              lastTs = v.ts; lastAmt = v.amountCents
-              Some(d)
-            } else None
-          }
-          state.update((lastTs, lastAmt))
-          out.iterator
-      }
+    Stateful.keyed[String, SkuAmount, (Long, Long), SkuAmountDelta](ds, _.id, None) {
+      (_, versions, st) =>
+        val (out, next) = StateLogic.upsertFold(st, versions)(_.ts, _.amountCents)
+        (out.map { case (v, d) => SkuAmountDelta(v.skuId, v.ts, d) }, next)
+    }
   }
 
   /** Full sku-order window: deltas → window agg → dim enrichment. */
@@ -181,64 +173,29 @@ object DwsApps {
 
   /** DwsUserUserLoginWindow (A6 + 7-day back-flow): per-uid state emits
     * unique-user and back-flow flags (reference :83-126); window-sum
-    * downstream. Transitions are [[graft.streaming.StateLogic.loginStep]]:
+    * downstream. Transitions are [[StateLogic.loginStep]]:
     * uu emits only when the day STRICTLY advances past the stored last
     * day, so a replayed or out-of-order older day can neither re-emit
     * uu nor regress the state (the reference's equality-only compare
     * double-counts on reordering). Property-tested in StatefulProps.
+    * `idleTtlDays` evicts a uid idle that many days of event time (see
+    * [[Stateful.keyed]]); if it logs in again it re-counts one uu and
+    * no back-flow — the reference's own TTL trade.
     */
-  def loginFlags(ds: Dataset[LoginEvent], gapDays: Int = 7): Dataset[LoginFlags] = {
+  def loginFlags(ds: Dataset[LoginEvent], gapDays: Int = 7,
+                 idleTtlDays: Option[Int] = None): Dataset[LoginFlags] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.uid)
-      .flatMapGroupsWithState[String, LoginFlags](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid, rows: Iterator[LoginEvent], state: GroupState[String]) =>
-          var last = state.getOption
-          val out = rows.toSeq.sortBy(e => (e.day, e.ts.getTime)).flatMap { e =>
-            val (uu, back, next) = graft.streaming.StateLogic.loginStep(last, e.day, gapDays)
-            last = Some(next)
-            if (uu) Some(LoginFlags(uid, 1L, if (back) 1L else 0L, e.ts)) else None
-          }
-          last.foreach(state.update)
-          out.iterator
-      }
-  }
-
-  /** [[loginFlags]] with dormant-uid eviction (VERDICT r2 #1; see
-    * graft.streaming.Stateful.firstSeenPerDayEvicting): a uid idle for
-    * `idleTtlDays` of event time is dropped from the store; if it logs
-    * in again it re-counts one uu (and, past the gap, a back-flow) —
-    * the reference's own TTL trade. Total state tracks ACTIVE uids.
-    * Batch runs behave exactly like [[loginFlags]].
-    */
-  def loginFlagsEvicting(ds: Dataset[LoginEvent], gapDays: Int = 7,
-                         idleTtlDays: Int = 30,
-                         watermarkDelay: String = "1 second"): Dataset[LoginFlags] = {
-    import ds.sparkSession.implicits._
-    val streaming = ds.isStreaming
-    val src = if (streaming) ds.withWatermark("ts", watermarkDelay) else ds
-    src.groupByKey(_.uid)
-      .flatMapGroupsWithState[String, LoginFlags](
-        OutputMode.Append,
-        if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout) {
-        (uid, rows: Iterator[LoginEvent], state: GroupState[String]) =>
-          if (streaming && state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var last = state.getOption
-            val out = rows.toSeq.sortBy(e => (e.day, e.ts.getTime)).flatMap { e =>
-              val (uu, back, next) = graft.streaming.StateLogic.loginStep(last, e.day, gapDays)
-              last = Some(next)
-              if (uu) Some(LoginFlags(uid, 1L, if (back) 1L else 0L, e.ts)) else None
-            }
-            last.foreach { d =>
-              state.update(d)
-              if (streaming) state.setTimeoutTimestamp(
-                math.max(graft.streaming.Stateful.dayExpiryMs(d, idleTtlDays),
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
+    Stateful.keyed(ds, (e: LoginEvent) => e.uid,
+      Stateful.idleDays[LoginEvent, String](idleTtlDays, col("ts"))((last, _) => last)) {
+      (uid, rows, st) =>
+        var last = st
+        val out = rows.sortBy(e => (e.day, e.ts.getTime)).flatMap { e =>
+          val (uu, back, next) = StateLogic.loginStep(last, e.day, gapDays)
+          last = Some(next)
+          if (uu) Some(LoginFlags(uid, 1L, if (back) 1L else 0L, e.ts)) else None
+        }
+        (out, last)
+    }
   }
 
   /** Full login window: flags → global tumbling sums (A3 shape). */

@@ -18,9 +18,10 @@ import java.time.LocalDate
   */
 case class BoundedDays(maxDay: String, recent: Set[String])
 
-/** Pure state transitions for the stateful family — factored out of
-  * the flatMapGroupsWithState closures so properties (state bound,
-  * exactness, replay monotonicity) are testable without a Spark job.
+/** Pure state transitions for the stateful family — the steps that
+  * [[Stateful.keyed]] folds each key's micro-batch through, kept apart
+  * from Spark so properties (state bound, exactness, replay
+  * monotonicity) are testable without a Spark job.
   */
 object StateLogic {
 
@@ -64,9 +65,8 @@ object StateLogic {
     * keys (keys seen within the TTL window) instead of all-time key
     * cardinality — the difference between O(daily actives) and
     * O(years of visitors) state at 100 TB. The Spark-side enforcement
-    * is the EventTimeTimeout in the `*Evicting` operators
-    * (Stateful/TrafficPageView/DwsApps); this pure form is what the
-    * properties replay.
+    * is the EventTimeTimeout of [[Stateful.keyed]] when an operator is
+    * given an idle TTL; this pure form is what the properties replay.
     */
   def expireIfIdle(st: Option[BoundedDays], watermarkDay: String,
                    idleDays: Int): Option[BoundedDays] =
@@ -88,4 +88,42 @@ object StateLogic {
         (true, gap > gapDays, day)
       case Some(last) => (false, false, last) // same or older day: no-op
     }
+
+  /** One is_new repair step (DwdBaseLog.isNewFix, DwdBaseLog.java:143-186).
+    * `firstDay` is the visitor's first-seen day, "" for a visitor known
+    * to predate the pipeline:
+    *  - is_new=1 but first seen on an earlier day → forged, flip to 0;
+    *  - is_new=0 and never seen → the visitor predates the pipeline:
+    *    record "" (before any day) so they never count as new.
+    * Returns (fixedIsNew, nextFirstDay).
+    */
+  def isNewStep(firstDay: Option[String], day: String, isNew: String): (String, String) =
+    firstDay match {
+      case None => if (isNew == "1") ("1", day) else ("0", "")
+      case Some(first) => (if (isNew == "1" && first == day) "1" else "0", first)
+    }
+
+  /** Upsert telescoping over one key's versions (DwsTradeSkuOrderWindow
+    * .processBeanStream :158-201): each accepted version emits
+    * (amount − last accepted amount), so the deltas sum to the newest
+    * version's amount without retract streams. The newest version is
+    * the greatest (ts, amount) — a tie on ts is broken by amount, in a
+    * batch and across batches alike, so the sum never depends on
+    * arrival order. A version below `last` (the state: the newest
+    * (ts, amount) accepted so far) is stale and ignored. Returns the
+    * accepted versions with their deltas and the next state.
+    */
+  def upsertFold[V](last: Option[(Long, Long)], versions: Seq[V])(
+      ts: V => Long, amount: V => Long): (Seq[(V, Long)], Option[(Long, Long)]) = {
+    var st = last
+    val out = versions.sortBy(v => (ts(v), amount(v))).flatMap { v =>
+      val cur = (ts(v), amount(v))
+      if (st.forall(s => Ordering[(Long, Long)].gteq(cur, s))) {
+        val delta = cur._2 - st.fold(0L)(_._2)
+        st = Some(cur)
+        Some(v -> delta)
+      } else None
+    }
+    (out, st)
+  }
 }

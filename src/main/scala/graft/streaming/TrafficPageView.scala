@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One page-view row (the LogSplit pageDf contract, typed). */
 case class PageViewRow(mid: String, vc: String, ch: String, ar: String,
@@ -23,7 +22,7 @@ case class TrafficBean(mid: String, vc: String, ch: String, ar: String,
   *   window × (vc, ch, ar, is_new) → Σuv Σsv Σpv Σdur with [stt,edt).
   *
   * Reference: mapUvBean (:120-179) + keyBy (:99-106) + window/reduce
-  * (:59-97). flatMapGroupsWithState in Append mode composes with the
+  * (:59-97). The keyed-state step (Append mode) composes with the
   * downstream windowed aggregation — one state shuffle on mid, one agg
   * shuffle on the window keys, both keyed so they scale horizontally.
   */
@@ -32,69 +31,30 @@ object TrafficPageView {
   /** Per-mid uv/sv flags. State is [[BoundedDays]] (max day + ≤7-day
     * recent-set, see [[StateLogic.firstSeenStep]]) — bounded per key
     * for the stream's whole lifetime, unlike a grow-forever day set.
+    * `idleTtlDays` evicts a mid idle that many days of event time (see
+    * [[Stateful.keyed]]); a returning mid re-counts one uv, the
+    * reference's own TTL semantics.
     */
-  def annotate(pages: Dataset[PageViewRow]): Dataset[TrafficBean] = {
+  def annotate(pages: Dataset[PageViewRow], idleTtlDays: Option[Int] = None): Dataset[TrafficBean] = {
     import pages.sparkSession.implicits._
-    pages.groupByKey(_.mid)
-      .flatMapGroupsWithState[BoundedDays, TrafficBean](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (mid: String, rows: Iterator[PageViewRow], state: GroupState[BoundedDays]) =>
-          var st = state.getOption
-          val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-          fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-          // ts-ascending processing ⇒ days arrive non-decreasing within
-          // the batch, so the retain window only matters across batches
-          val out = rows.toSeq.sortBy(_.ts.getTime).map { r =>
-            val day = fmt.format(r.ts)
-            val (emit, next) = StateLogic.firstSeenStep(st, day)
-            st = Some(next)
-            val uv = if (emit) 1L else 0L
-            val sv = if (r.lastPageId == null) 1L else 0L
-            TrafficBean(mid, r.vc, r.ch, r.ar, r.isNew, uv, sv, 1L, r.durMs, r.ts)
-          }
-          st.foreach(state.update)
-          out.iterator
-      }
-  }
-
-  /** [[annotate]] with dormant-mid eviction (VERDICT r2 #1; see
-    * Stateful.firstSeenPerDayEvicting): a mid idle for `idleTtlDays`
-    * of event time is dropped from the store; a returning mid
-    * re-counts one uv, the reference's own TTL semantics. Total state
-    * tracks ACTIVE mids. Batch runs behave exactly like [[annotate]].
-    */
-  def annotateEvicting(pages: Dataset[PageViewRow], idleTtlDays: Int = 7,
-                       watermarkDelay: String = "1 second"): Dataset[TrafficBean] = {
-    import pages.sparkSession.implicits._
-    val streaming = pages.isStreaming
-    val src = if (streaming) pages.withWatermark("ts", watermarkDelay) else pages
-    src.groupByKey(_.mid)
-      .flatMapGroupsWithState[BoundedDays, TrafficBean](
-        OutputMode.Append,
-        if (streaming) GroupStateTimeout.EventTimeTimeout else GroupStateTimeout.NoTimeout) {
-        (mid: String, rows: Iterator[PageViewRow], state: GroupState[BoundedDays]) =>
-          if (streaming && state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption
-            val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
-            fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-            val out = rows.toSeq.sortBy(_.ts.getTime).map { r =>
-              val day = fmt.format(r.ts)
-              val (emit, next) = StateLogic.firstSeenStep(st, day)
-              st = Some(next)
-              val uv = if (emit) 1L else 0L
-              val sv = if (r.lastPageId == null) 1L else 0L
-              TrafficBean(mid, r.vc, r.ch, r.ar, r.isNew, uv, sv, 1L, r.durMs, r.ts)
-            }
-            st.foreach { s =>
-              state.update(s)
-              if (streaming) state.setTimeoutTimestamp(
-                math.max(Stateful.dayExpiryMs(s.maxDay, idleTtlDays),
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
+    Stateful.keyed(pages, (r: PageViewRow) => r.mid,
+      Stateful.idleDays[PageViewRow, BoundedDays](idleTtlDays, col("ts"))((s, _) => s.maxDay)) {
+      (mid, rows, st0) =>
+        var st = st0
+        val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
+        fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
+        // ts-ascending processing ⇒ days arrive non-decreasing within
+        // the batch, so the retain window only matters across batches
+        val out = rows.sortBy(_.ts.getTime).map { r =>
+          val day = fmt.format(r.ts)
+          val (emit, next) = StateLogic.firstSeenStep(st, day)
+          st = Some(next)
+          val uv = if (emit) 1L else 0L
+          val sv = if (r.lastPageId == null) 1L else 0L
+          TrafficBean(mid, r.vc, r.ch, r.ar, r.isNew, uv, sv, 1L, r.durMs, r.ts)
+        }
+        (out, st)
+    }
   }
 
   /** Full app: annotate → windowed multi-metric aggregate. */

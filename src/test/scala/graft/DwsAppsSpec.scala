@@ -60,6 +60,17 @@ class DwsAppsSpec extends SparkSpec {
     assert(bySku == Map("sku1" -> 1800L, "sku2" -> 700L))
   }
 
+  test("skuAmountDeltas: two versions with the same ts sum the same in either arrival order") {
+    val v1 = SkuAmount("d1", "sku1", 1000L, 1000L)
+    val v2 = SkuAmount("d1", "sku1", 1000L, 1300L)
+    // one input partition keeps the given order up to the group step
+    def sums(in: Seq[SkuAmount]): Map[String, Long] =
+      DwsApps.skuAmountDeltas(in.toDS().coalesce(1)).collect()
+        .groupBy(_.skuId).view.mapValues(_.map(_.deltaCents).sum).toMap
+    assert(sums(Seq(v1, v2)) == sums(Seq(v2, v1)))
+    assert(sums(Seq(v2, v1)) == Map("sku1" -> 1300L)) // the tie goes to the greater amount
+  }
+
   test("skuOrderWindow streaming: windowed sums equal latest amounts, dims joined") {
     implicit val sqlCtx = spark.sqlContext
     val skuDim = Seq(("sku1", "phone"), ("sku2", "book")).toDF("skuId", "sku_name")

@@ -1,65 +1,139 @@
 package graft
 
+import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, EventTimeWatermark,
+  FlatMapGroupsWithState, Project}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, sum}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery}
 import graft.model._
-import graft.streaming.Stateful
+import graft.rtdw.{DwsApps, LoginEvent}
+import graft.streaming.{PageViewRow, Stateful, TrafficPageView}
 
-/** VERDICT r2 #1 — dormant-key eviction for the A6 state family.
+/** VERDICT r2 #1 — dormant-key eviction for the stateful family.
   *
   * With eviction ON: (a) active keys behave exactly as without it;
   * (b) a key idle past the event-time TTL is PHYSICALLY removed from
   * the state store (numRowsTotal tracks active keys, not all-time
   * keys); (c) a returning evicted key re-counts — one extra emission,
   * the reference's own 1-day StateTtlConfig semantics
-  * (DwsTrafficVcChArIsNewPageViewWindow.java:133-136).
+  * (DwsTrafficVcChArIsNewPageViewWindow.java:133-136). (a)–(c) are
+  * checked for every operator of the family over one shared feed.
   */
 class StatefulEvictionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def stateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+  private def stateRows(q: StreamingQuery): Long =
     q.lastProgress.stateOperators.map(_.numRowsTotal).sum
 
+  private def ts(day: String) = Timestamp.valueOf(s"$day 10:00:00")
+
+  /** u1 and u2 on day 1; only u2 stays active (day 20) — the watermark
+    * jumps past u1's (day 1 + 7 d) expiry; new key u3 on day 21; u1
+    * returns on day 22.
+    */
+  private val feed = Seq(
+    Seq("u1" -> "2024-01-01", "u2" -> "2024-01-01"),
+    Seq("u2" -> "2024-01-20"),
+    Seq("u3" -> "2024-01-21"),
+    Seq("u1" -> "2024-01-22"))
+
+  /** One operator of the family under [[feed]]: `row` builds its input
+    * for (key, day), `run` applies it with an optional idle TTL in
+    * days, and `u1` sums what it emitted for the returning key u1 —
+    * `recount` is that sum (with eviction, without).
+    */
+  private case class Op[T](name: String, keyCol: String, row: (String, String) => T,
+                           run: (Dataset[T], Option[Int]) => DataFrame,
+                           u1: DataFrame => Long, recount: (Long, Long))(implicit enc: Encoder[T]) {
+
+    /** [[feed]] as a stream: (state rows after each micro-batch,
+      * emissions for keys other than u1, u1's sum).
+      */
+    def streamed(ttl: Option[Int]): (Seq[Long], Set[Row], Long) = {
+      implicit val sqlCtx = spark.sqlContext
+      val ms = MemoryStream[T]
+      val table = s"evict_${name}_${ttl.isDefined}"
+      val q = run(ms.toDS(), ttl).writeStream.format("memory").queryName(table)
+        .outputMode("append").start()
+      try {
+        val rows = feed.map { b =>
+          ms.addData(b.map { case (k, d) => row(k, d) })
+          q.processAllAvailable()
+          stateRows(q)
+        }
+        val out = spark.table(table)
+        (rows, out.filter(col(keyCol) =!= "u1").collect().toSet, u1(out))
+      } finally q.stop()
+    }
+
+    /** [[feed]] as one batch Dataset. */
+    def batched(ttl: Option[Int]): Set[Row] =
+      run(spark.createDataset(feed.flatten.map { case (k, d) => row(k, d) }), ttl).collect().toSet
+  }
+
+  private def u1Sum(keyCol: String, c: String)(out: DataFrame): Long =
+    out.filter(col(keyCol) === "u1").agg(sum(col(c)).cast("long")).as[Long].head()
+
+  private val family: Seq[Op[_]] = Seq(
+    // a return carrying a current day emits either way: the re-count is
+    // not visible in the output, only in the state rows
+    Op[KeyDay]("firstSeenPerDay", "key", KeyDay(_, _),
+      (ds, ttl) => Stateful.firstSeenPerDay(ds, ttl).toDF(),
+      _.filter(col("key") === "u1").count(), (2L, 2L)),
+    // u1 claims new again on return: evicted ⇒ accepted as new once more
+    Op[VisitorHit]("isNewFix", "mid", VisitorHit(_, _, "1"),
+      (ds, ttl) => Stateful.isNewFix(ds, ttl).toDF(),
+      _.filter(col("mid") === "u1" && col("isNew") === "1").count(), (2L, 1L)),
+    // amount 100 × day-of-month: evicted ⇒ the return re-counts in full
+    Op[VersionedAmount]("upsertDeltas", "key",
+      (k, d) => VersionedAmount(k, Stateful.dayMs(d), 100L * d.takeRight(2).toLong),
+      (ds, ttl) => Stateful.upsertDeltas(ds, ttl.map(d => s"$d days")).toDF(),
+      u1Sum("key", "delta"), (2300L, 2200L)),
+    // evicted ⇒ the return is a first login, not a back-flow
+    Op[LoginEvent]("loginFlags", "uid", (k, d) => LoginEvent(k, d, ts(d)),
+      (ds, ttl) => DwsApps.loginFlags(ds, idleTtlDays = ttl).toDF(),
+      u1Sum("uid", "backCt"), (0L, 1L)),
+    Op[PageViewRow]("annotate", "mid",
+      (k, d) => PageViewRow(k, "v1", "ch", "ar", "1", null, 10L, ts(d)),
+      (ds, ttl) => TrafficPageView.annotate(ds, ttl).toDF(),
+      u1Sum("mid", "uvCt"), (2L, 2L)))
+
   test("idle key is evicted from the store and re-counts on return; active keys unaffected") {
+    family.foreach { op =>
+      val (evictRows, evictOthers, evictU1) = op.streamed(Some(7))
+      val (keepRows, keepOthers, keepU1) = op.streamed(None)
+      // after day 21 the store holds {u2, u3}; u1 re-enters on return
+      assert(evictRows.drop(2) == Seq(2L, 3L), s"${op.name}: state rows $evictRows")
+      assert(keepRows.drop(2) == Seq(3L, 3L), s"${op.name}: state rows without eviction $keepRows")
+      assert(evictOthers == keepOthers, s"${op.name}: active keys' emissions changed")
+      assert((evictU1, keepU1) == op.recount, s"${op.name}: u1 re-count")
+    }
+  }
+
+  test("batch runs of the evicting variants equal their non-evicting twins") {
+    // no watermark on a batch input ⇒ no timeouts: the TTL is inert
+    family.foreach(op => assert(op.batched(Some(7)) == op.batched(None), op.name))
+  }
+
+  test("eviction off adds no watermark, projection or timeout to the streaming plan") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[KeyDay]
-    val q = Stateful.firstSeenPerDayEvicting(ms.toDS(), idleTtlDays = 7)
-      .writeStream.format("memory").queryName("fsd_evict").outputMode("append").start()
-    try {
-      // batch 1: two keys on day 1 → both emit, 2 state rows
-      ms.addData(KeyDay("u1", "2024-01-01"), KeyDay("u2", "2024-01-01"))
-      q.processAllAvailable()
-
-      // batch 2: only u2 stays active, 20 days later — the watermark
-      // jumps past u1's (day1 + 7d) timeout
-      ms.addData(KeyDay("u2", "2024-01-20"))
-      q.processAllAvailable()
-
-      // batch 3: new key u3; by now u1 must have timed out and been
-      // REMOVED — state holds only the keys active inside the TTL
-      ms.addData(KeyDay("u3", "2024-01-21"))
-      q.processAllAvailable()
-      assert(stateRows(q) == 2, s"expected {u2,u3} in state, got ${stateRows(q)} rows")
-
-      // batch 4: u1 RETURNS on a current day → counted again from
-      // empty state and re-enters the store. (A return carrying an
-      // already-counted OLD day is dropped as late by the watermark —
-      // so unlike the reference's TTL, eviction here can never produce
-      // a visible double-count; the trade is purely state size.)
-      ms.addData(KeyDay("u1", "2024-01-22"))
-      q.processAllAvailable()
-
-      val rows = spark.table("fsd_evict").as[FirstSeen].collect().toSeq
-      assert(rows.count(_.key == "u1") == 2, s"returning evicted key must count anew: $rows")
-      // active keys' emissions are exactly the no-eviction set
-      assert(rows.count(r => r.key == "u2") == 2 && rows.count(r => r.key == "u3") == 1)
-      assert(stateRows(q) == 3, "returned key re-enters the store")
-    } finally q.stop()
+    def shape(ttl: Option[Int]) = {
+      val plan = Stateful.firstSeenPerDay(ms.toDS(), ttl).queryExecution.analyzed
+      val f = plan.collectFirst { case f: FlatMapGroupsWithState => f }.get
+      (f.timeout, f.child.isInstanceOf[AppendColumns],
+        plan.exists(_.isInstanceOf[EventTimeWatermark]), plan.exists(_.isInstanceOf[Project]))
+    }
+    assert(shape(None) == ((GroupStateTimeout.NoTimeout, true, false, false)))
+    assert(shape(Some(7)) == ((GroupStateTimeout.EventTimeTimeout, true, true, true)))
   }
 
   test("no key idle past the TTL ⇒ emissions identical to the non-evicting operator") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[KeyDay]
-    val q = Stateful.firstSeenPerDayEvicting(ms.toDS(), idleTtlDays = 7)
+    val q = Stateful.firstSeenPerDay(ms.toDS(), idleTtlDays = Some(7))
       .writeStream.format("memory").queryName("fsd_evict_quiet").outputMode("append").start()
     try {
       ms.addData(KeyDay("u1", "2024-01-01"), KeyDay("u2", "2024-01-01"))
@@ -82,9 +156,9 @@ class StatefulEvictionSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       def startQuery() =
-        Stateful.firstSeenPerDayEvicting(
+        Stateful.firstSeenPerDay(
           spark.readStream.schema("key STRING, day STRING").json(in).as[KeyDay],
-          idleTtlDays = 7)
+          idleTtlDays = Some(7))
           .writeStream.format("parquet")
           .option("path", outDir)
           .option("checkpointLocation", ck)
@@ -110,38 +184,10 @@ class StatefulEvictionSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
-  test("batch runs of the evicting variants equal their non-evicting twins") {
-    val days = Seq(
-      KeyDay("u1", "2024-01-01"), KeyDay("u1", "2024-01-01"),
-      KeyDay("u1", "2024-03-01"), KeyDay("u2", "2024-02-01"))
-    assert(Stateful.firstSeenPerDayEvicting(days.toDS()).collect().toSet ==
-      Stateful.firstSeenPerDay(days.toDS()).collect().toSet)
-
-    val hits = Seq(VisitorHit("m1", "2024-01-01", "1"), VisitorHit("m1", "2024-01-02", "1"),
-      VisitorHit("m2", "2024-01-02", "0"))
-    assert(Stateful.isNewFixEvicting(hits.toDS()).collect().toSet ==
-      Stateful.isNewFix(hits.toDS()).collect().toSet)
-
-    val logins = Seq(
-      graft.rtdw.LoginEvent("a", "2024-01-01", java.sql.Timestamp.valueOf("2024-01-01 10:00:00")),
-      graft.rtdw.LoginEvent("a", "2024-01-20", java.sql.Timestamp.valueOf("2024-01-20 10:00:00")),
-      graft.rtdw.LoginEvent("b", "2024-01-02", java.sql.Timestamp.valueOf("2024-01-02 10:00:00")))
-    assert(graft.rtdw.DwsApps.loginFlagsEvicting(logins.toDS()).collect().toSet ==
-      graft.rtdw.DwsApps.loginFlags(logins.toDS()).collect().toSet)
-
-    val pages = Seq(
-      graft.streaming.PageViewRow("m1", "v1", "ch", "ar", "1", null, 10L,
-        java.sql.Timestamp.valueOf("2024-01-01 10:00:00")),
-      graft.streaming.PageViewRow("m1", "v1", "ch", "ar", "1", "home", 20L,
-        java.sql.Timestamp.valueOf("2024-01-02 10:00:00")))
-    assert(graft.streaming.TrafficPageView.annotateEvicting(pages.toDS()).collect().toSet ==
-      graft.streaming.TrafficPageView.annotate(pages.toDS()).collect().toSet)
-  }
-
   test("upsertDeltasEvicting: within-TTL corrections telescope; state tracks the correction window") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[VersionedAmount]
-    val q = Stateful.upsertDeltasEvicting(ms.toDS(), ttl = "30 seconds")
+    val q = Stateful.upsertDeltas(ms.toDS(), ttl = Some("30 seconds"))
       .writeStream.format("memory").queryName("ud_evict").outputMode("append").start()
     try {
       val t0 = 1704067200000L
@@ -161,18 +207,13 @@ class StatefulEvictionSpec extends SparkSpec {
         .agg(org.apache.spark.sql.functions.sum("delta").as("s"))
         .as[(String, Long)].collect().toMap
       assert(sums("d1") == 1300L && sums("d2") == 500L, s"telescoping broke: $sums")
-      // batch parity with the non-evicting operator
-      val batchIn = Seq(VersionedAmount("a", 1L, 10L), VersionedAmount("a", 2L, 15L),
-        VersionedAmount("b", 1L, 7L))
-      assert(Stateful.upsertDeltasEvicting(batchIn.toDS()).collect().toSet ==
-        Stateful.upsertDeltas(batchIn.toDS()).collect().toSet)
     } finally q.stop()
   }
 
   test("evicting isNewFix drops a dormant mid and re-fixes a returning one from scratch") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[VisitorHit]
-    val q = Stateful.isNewFixEvicting(ms.toDS(), idleTtlDays = 7)
+    val q = Stateful.isNewFix(ms.toDS(), idleTtlDays = Some(7))
       .writeStream.format("memory").queryName("inf_evict").outputMode("append").start()
     try {
       ms.addData(VisitorHit("m1", "2024-01-01", "1"), VisitorHit("m2", "2024-01-01", "1"))
